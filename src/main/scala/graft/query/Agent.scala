@@ -1,7 +1,10 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructType}
 
 /** Deterministic replacement for the reference's LLM agent loop
   * (SURVEY.md §3.1, agent.py:127-228). The LLM chose tools from a
@@ -61,6 +64,7 @@ object Agent {
           queryVec: org.apache.spark.sql.Column, topK: Int = 5,
           historyDir: Option[String] = None): AgentResult = {
     val t0 = System.nanoTime()
+    val spark = corpus.chunksV.sparkSession
     var tools = Vector.empty[String]
 
     val graphHits: Option[DataFrame] =
@@ -72,19 +76,21 @@ object Agent {
     // KG-only queries trigger a compensating vector search
     // (agent.py:185-188); plain queries search directly.
     tools :+= "search_papers"
-    val hits = Tools.searchPapers(corpus.chunksV, queryVec, topK)
+    val hits = Tools.searchPapers(corpus.chunksV, queryVec, topK).limit(5)
 
-    val citations = hits.limit(5).cache()
-    val nCitations = citations.count()
+    // the one citation job: everything after it (summary, history
+    // records, response) works from these ≤5 rows as a local relation
+    val rows = hits.collect()
+    val citations = spark.createDataFrame(rows.toSeq.asJava, hits.schema)
 
     // force-invoked, appended to tools_used only when absent
     // (agent.py:204-211) — with this planner that is always
     if (!tools.contains("summarize_context")) tools :+= "summarize_context"
     val answer =
-      if (nCitations == 0)
+      if (rows.isEmpty)
         "I'm sorry, I could not find relevant context to answer that."
-      else
-        Tools.summarizeContext(citations).head().getString(0)
+      else // one partition: the context window needs no shuffle
+        Tools.summarizeContext(citations.coalesce(1)).head().getString(0)
 
     // materialize graph hits (if any) so the tool actually executed
     graphHits.foreach(_.count())
@@ -98,7 +104,6 @@ object Agent {
     val result = AgentResult(answer, citations, tools, steps = tools.size, latencyMs = latencyMs)
 
     historyDir.foreach { dir =>
-      val spark = corpus.chunksV.sparkSession
       graft.sources.Sources.appendJsonl(historyRecord(spark, question, result), s"$dir/history")
       graft.sources.Sources.appendJsonl(evalMetricsRow(spark, question, result), s"$dir/eval_metrics")
     }
@@ -107,30 +112,35 @@ object Agent {
 
   /** The reference's history entry (backend/app.py:51-56): timestamp
     * (ISO-8601), query, answer, and the citation chunk metadata as an
-    * array of structs ordered by score descending.
+    * array of structs ordered by score descending (ties by chunk_id
+    * descending). Built on the driver from the collected citations,
+    * so the record is a local relation and writing it runs no job.
     */
   def historyRecord(spark: SparkSession, question: String,
                     result: AgentResult): DataFrame = {
-    result.citations
-      .agg(reverse(array_sort(collect_list(struct(
-        col("score"), col("chunk_id"), col("paper_id"), col("title"))))).as("chunks"))
+    val cits = result.citations.select("score", "chunk_id", "paper_id", "title")
+    val chunks = cits.collect().toSeq
+      .sortBy(r => (r.getDouble(0), r.getString(1)))(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.String))
+      .reverse
+    val schema = StructType(Seq(
+      StructField("query", StringType), StructField("answer", StringType),
+      StructField("chunks", ArrayType(cits.schema, containsNull = false))))
+    spark.createDataFrame(Seq(Row(question, result.answer, chunks)).asJava, schema)
       .withColumn("timestamp",
         date_format(current_timestamp(), "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"))
-      .withColumn("query", lit(question))
-      .withColumn("answer", lit(result.answer))
       .select("timestamp", "query", "answer", "chunks")
   }
 
   /** Append-only eval-metrics row for a finished run
-    * (APP.EVAL_METRICS shape, sql/01_create_schema.sql:97-108). */
+    * (APP.EVAL_METRICS shape, sql/01_create_schema.sql:97-108);
+    * confidence is the top citation score, 0.0 without citations. */
   def evalMetricsRow(spark: SparkSession, question: String,
                      result: AgentResult, retrievalMode: String = "agentic"): DataFrame = {
     import spark.implicits._
-    val confidence = result.citations
-      .agg(max(col("score"))).head() match {
-        case r if r.isNullAt(0) => 0.0
-        case r => r.getDouble(0)
-      }
+    val confidence = result.citations.select("score").collect()
+      .filterNot(_.isNullAt(0)).map(_.getDouble(0))
+      .maxOption(Ordering.Double.TotalOrdering).getOrElse(0.0)
     Seq((question, result.answer, result.toolsUsed.mkString(","), retrievalMode,
       confidence, result.latencyMs))
       .toDF("question", "generated_response", "context_used", "retrieval_mode",

@@ -7,6 +7,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.graft.Bridge
 
 /** Minimal HTTP serving surface over [[Agent.run]] — the reference's
   * FastAPI backend re-expressed on the JDK's built-in server (no new
@@ -24,11 +25,15 @@ import org.apache.spark.sql.Column
   *    `input()` call is a documented bug, not replicated —
   *    docs/AGENT_ARCHITECTURE_ANALYSIS.md:52.)
   *
-  * Scale note: the server holds only a [[Agent.Corpus]] of DataFrames
-  * — every request plans a Spark query against the (cached) corpus,
-  * so the same handler works unchanged whether the session is
-  * local[32] or a 1000-executor cluster; no driver-side corpus copy
-  * beyond what `chunksV.cache()` already pins.
+  * Scale note: the server holds only a [[Agent.Corpus]] of DataFrames.
+  * A `/query` runs its top-k search as one Spark job against the
+  * (cached) corpus and collects the ≤5 citations; the summary, the
+  * history records and the response are built from those rows on the
+  * driver (graph questions add the KG tool's jobs). The same handler
+  * works unchanged whether the session is local[32] or a
+  * 1000-executor cluster; no driver-side corpus copy beyond what
+  * `chunksV.cache()` already pins, and per-request driver state is
+  * bounded by the citation cap.
   */
 object Server {
 
@@ -52,12 +57,12 @@ object Server {
   def start(corpus: Agent.Corpus, queryVec: Column, port: Int = 0,
             historyDir: Option[String] = None): Handle = {
     val server = HttpServer.create(new InetSocketAddress(port), 0)
-    // Serializes MUTATIONS of the history sinks only: concurrent
-    // Spark appends to one directory share a _temporary staging dir
-    // (one job's commit cleanup breaks the other's tasks), and /reset
-    // must not delete under an in-flight append. Query COMPUTE stays
-    // concurrent — Agent.run executes outside the lock with no sink,
-    // only the append/delete critical sections take it.
+    // Orders the history sinks' file publications against /reset's
+    // delete, so /reset never deletes under an in-flight append and
+    // an append never lands half inside a cleared sink. Everything
+    // else stays concurrent: Agent.run and the encoding of both
+    // records run outside the lock, which is held only to write and
+    // rename two small part files.
     val sinkLock = new Object
 
     server.createContext("/query", (ex: HttpExchange) => handle(ex) {
@@ -81,11 +86,12 @@ object Server {
               topK = topK, historyDir = None)
             historyDir.foreach { dir =>
               val spark = corpus.chunksV.sparkSession
+              val records = Seq(
+                "history" -> Bridge.jsonLines(Agent.historyRecord(spark, qNode.asText, res)),
+                "eval_metrics" -> Bridge.jsonLines(Agent.evalMetricsRow(spark, qNode.asText, res)))
               sinkLock.synchronized {
-                graft.sources.Sources.appendJsonl(
-                  Agent.historyRecord(spark, qNode.asText, res), s"$dir/history")
-                graft.sources.Sources.appendJsonl(
-                  Agent.evalMetricsRow(spark, qNode.asText, res), s"$dir/eval_metrics")
+                records.foreach { case (sub, lines) =>
+                  graft.sources.Sources.publishJsonl(spark, lines, s"$dir/$sub") }
               }
             }
             (200, queryResponse(res))
@@ -199,12 +205,13 @@ object Server {
 
   /** backend/app.py:100-110's response shape. Citations carry the
     * search projection (chunk/paper ids, title, section, text,
-    * score — tools.py:79-86) straight from the result DataFrame. */
+    * score — tools.py:79-86) straight from the result's local rows,
+    * encoded as `toJSON` would encode them. */
   private def queryResponse(res: Agent.AgentResult): ObjectNode = {
     val node = mapper.createObjectNode()
     node.put("answer", res.answer)
     val cits: ArrayNode = node.putArray("citations")
-    res.citations.toJSON.collect().foreach(s => cits.add(mapper.readTree(s)))
+    Bridge.jsonLines(res.citations).foreach(s => cits.add(mapper.readTree(s)))
     val confidence = {
       var best = 0.0
       val it = cits.elements()

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface beyond the fixture parquet (SURVEY.md §2.1):
@@ -40,9 +41,39 @@ object Sources {
   def writeCsv(df: DataFrame, path: String, mode: SaveMode = SaveMode.Overwrite): Unit =
     df.write.mode(mode).option("header", "true").csv(path)
 
-  /** S7 — append-only JSON-lines log (one file set per append). */
+  /** S7 — append-only JSON-lines log: a driver-side writer for small
+    * per-request records (the agent's history and eval-metrics rows).
+    * The rows are collected through the executed plan, so a local
+    * record runs no Spark job, and are encoded line for line as
+    * `write.json` encodes them ([[Bridge.jsonLines]]). Each append
+    * publishes one part file ([[publishJsonl]]). Every row passes
+    * through the driver: not a writer for bulk data.
+    */
   def appendJsonl(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Append).json(path)
+    publishJsonl(df.sparkSession, Bridge.jsonLines(df), path)
+
+  /** Publish encoded JSON lines as one new `part-<uuid>.json` under
+    * `path` through the Hadoop FileSystem API. The file is written
+    * under a hidden name, which readers skip, and then renamed into
+    * place, so no reader ever lists a half-written part file. No
+    * lines publish no file.
+    */
+  def publishJsonl(spark: SparkSession, lines: Seq[String], path: String): Unit = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(dir)
+    if (lines.nonEmpty) {
+      val name = s"part-${java.util.UUID.randomUUID()}.json"
+      val tmp = new org.apache.hadoop.fs.Path(dir, s".$name.tmp")
+      val out = fs.create(tmp, false)
+      try out.write(lines.mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+      if (!fs.rename(tmp, new org.apache.hadoop.fs.Path(dir, name))) {
+        fs.delete(tmp, false)
+        throw new java.io.IOException(s"could not publish $name under $path")
+      }
+    }
+  }
 
   /** Write a table bucketed+sorted on a join key. Joining two tables
     * bucketed the same way needs NO shuffle on either side — the

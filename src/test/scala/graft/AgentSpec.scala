@@ -79,6 +79,56 @@ class AgentSpec extends SparkSpec {
       .forall(m.columns.contains))
   }
 
+  test("run caches nothing: persistent RDDs unchanged across query vectors") {
+    def vec(id: Long) = {
+      val e = Tables.load(spark, Sf0001, "embeddings")
+        .filter(col("vec_id") === id).select("embedding").head()
+      array(e.getSeq[Float](0).map(v => lit(v)): _*)
+    }
+    Agent.run(corpus, "what is a spark query", queryVec) // builds the corpus caches
+    val before = spark.sparkContext.getPersistentRDDs.size
+    // one vector per question, as real traffic has: a per-run cache
+    // would pin a new relation on every call
+    for (id <- 1L to 3L) {
+      val res = Agent.run(corpus, "what is a spark query", vec(id))
+      assert(res.citations.count() == 5)
+    }
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
+  test("historyRecord and evalMetricsRow equal the aggregate reference, 5 and 0 citations") {
+    // the aggregate expressions the records were built with before
+    // they were computed from the collected citations
+    def refHistory(question: String, res: Agent.AgentResult) =
+      res.citations
+        .agg(reverse(array_sort(collect_list(struct(
+          col("score"), col("chunk_id"), col("paper_id"), col("title"))))).as("chunks"))
+        .withColumn("query", lit(question))
+        .withColumn("answer", lit(res.answer))
+        .select("query", "answer", "chunks")
+    def refConfidence(res: Agent.AgentResult) =
+      res.citations.agg(max(col("score"))).head() match {
+        case r if r.isNullAt(0) => 0.0
+        case r => r.getDouble(0)
+      }
+    val five = Agent.run(corpus, "what is a spark query", queryVec)
+    val none = Agent.run(corpus.copy(chunksV = corpus.chunksV.filter(lit(false))),
+      "anything", queryVec)
+    assert(five.citations.count() == 5 && none.citations.count() == 0)
+    for ((q, res) <- Seq("what is a spark query" -> five, "anything" -> none)) {
+      val hist = Agent.historyRecord(spark, q, res)
+      assert(hist.columns.toSeq == Seq("timestamp", "query", "answer", "chunks"))
+      assert(hist.drop("timestamp").collect().toSeq == refHistory(q, res).collect().toSeq)
+      val m = Agent.evalMetricsRow(spark, q, res).head()
+      assert(m.getAs[Double]("confidence") == refConfidence(res))
+      assert(m.getAs[String]("question") == q &&
+        m.getAs[String]("generated_response") == res.answer &&
+        m.getAs[String]("context_used") == res.toolsUsed.mkString(","))
+    }
+    assert(Agent.evalMetricsRow(spark, "anything", none).head()
+      .getAs[Double]("confidence") == 0.0)
+  }
+
   test("callTool dispatches by name with argument-name tolerance") {
     val hits = Tools.callTool(corpus, queryVec, "search_papers",
       Map("top_k" -> "3")).toOption.get

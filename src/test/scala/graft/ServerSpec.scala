@@ -130,10 +130,98 @@ class ServerSpec extends SparkSpec {
     }
   }
 
+  /** Spark jobs started while `f` runs, from any thread. Two canary
+    * jobs bracket `f`; listener delivery is FIFO, so once the second
+    * canary has arrived every job `f` started has been counted. */
+  private def jobsDuring(f: => Unit): Int = {
+    val canaries = new java.util.concurrent.atomic.AtomicInteger(0)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(j.properties).map(_.getProperty("spark.jobGroup.id", "")).getOrElse("")
+        if (g == "budget_canary") canaries.incrementAndGet()
+        else if (canaries.get() == 1) jobs.incrementAndGet()
+        ()
+      }
+    }
+    def canary(n: Int): Unit = {
+      spark.sparkContext.setJobGroup("budget_canary", "canary", false)
+      try spark.sparkContext.parallelize(Seq(1), 1).count() // exactly one job
+      finally spark.sparkContext.clearJobGroup()
+      val deadline = System.currentTimeMillis + 30000
+      while (canaries.get() < n && System.currentTimeMillis < deadline) Thread.sleep(20)
+      assert(canaries.get() == n, "canary job never arrived")
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      canary(1)
+      f
+      canary(2)
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("job budget: a plain /query with the history sink runs at most 2 Spark jobs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_srv_budget").toString
+    withServer(historyDir = Some(dir)) { port =>
+      // the first request builds the corpus caches
+      assert(post(port, "/query", """{"question": "what is spark"}""").statusCode() == 200)
+      val n = jobsDuring {
+        assert(post(port, "/query", """{"question": "what is a spark query"}""")
+          .statusCode() == 200)
+      }
+      // the top-k collect and summarize_context; the records and the
+      // response are built on the driver
+      assert(n <= 2, s"a plain /query ran $n Spark jobs")
+    }
+  }
+
+  test("job budget: appending a history record runs no Spark job") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_srv_budget").toString
+    val res = Agent.run(corpus, "what is a spark query", queryVec)
+    val record = Agent.historyRecord(spark, "what is a spark query", res)
+    val n = jobsDuring(graft.sources.Sources.appendJsonl(record, s"$dir/history"))
+    assert(n == 0, s"appending a history record ran $n Spark jobs")
+    assert(spark.read.json(s"$dir/history").count() == 1)
+  }
+
+  test("torn writes: hidden temp files are skipped and /reset racing appends tears no part file") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_srv_torn").toString
+    val hist = new java.io.File(dir, "history")
+    withServer(historyDir = Some(dir)) { port =>
+      assert(post(port, "/query", """{"question": "what is spark"}""").statusCode() == 200)
+      // a crash between writing and renaming leaves a hidden temp file
+      java.nio.file.Files.writeString(new java.io.File(hist, ".part-crashed.json.tmp").toPath,
+        """{"timestamp":"2024-01-01T00:00:00.000000Z","query":"torn""")
+      val back = spark.read.json(hist.getPath)
+      assert(back.count() == 1 && !back.columns.contains("_corrupt_record"))
+      assert(back.head().getAs[String]("query") == "what is spark")
+
+      import scala.concurrent.{Await, Future, blocking}
+      import scala.concurrent.duration._
+      import scala.concurrent.ExecutionContext.Implicits.global
+      // resets staggered across the appends' window
+      val calls = (1 to 6).flatMap(i => Seq(
+        Future(blocking(post(port, "/query", s"""{"question": "race question $i"}""").statusCode())),
+        Future(blocking { Thread.sleep(60L * i); post(port, "/reset", "").statusCode() })))
+      assert(Await.result(Future.sequence(calls), 300.seconds).forall(_ == 200))
+      // whatever survived the resets is whole: every part file is one
+      // complete record, and no temp file is left behind
+      for (sub <- Seq("history", "eval_metrics")) {
+        val files = Option(new java.io.File(dir, sub).listFiles()).getOrElse(Array.empty)
+        assert(!files.exists(_.getName.contains(".tmp")), files.map(_.getName).mkString(", "))
+        for (f <- files if f.getName.startsWith("part-")) {
+          val lines = java.nio.file.Files.readAllLines(f.toPath)
+          assert(lines.size == 1)
+          assert(mapper.readTree(lines.get(0)).isObject)
+        }
+      }
+    }
+  }
+
   test("concurrent /query requests both land their history rows") {
-    // the sink lock serializes appends to the shared directory
-    // (concurrent Spark appends share _temporary staging); compute
-    // stays concurrent, but neither request's record may be lost
+    // the sink lock orders appends against /reset; compute stays
+    // concurrent, but neither request's record may be lost
     val dir = java.nio.file.Files.createTempDirectory("graft_srv_conc").toString
     withServer(historyDir = Some(dir)) { port =>
       import scala.concurrent.{Await, Future}

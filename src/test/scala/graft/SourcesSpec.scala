@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.sources.Sources
@@ -28,6 +30,25 @@ class SourcesSpec extends SparkSpec {
     val back = Sources.readJsonl(spark, s"$dir/log", schema)
     assert(back.count() == 4)
     assert(back.filter(col("id") === 1).count() == 2)
+  }
+
+  test("appendJsonl's driver-side file holds write.json's lines") {
+    val dir = java.nio.file.Files.createTempDirectory("src").toString
+    val rows = Seq(
+      (1L, "a", 1.5, Seq(("x", 0.25), ("y", 2.0)), java.sql.Timestamp.valueOf("2024-01-02 03:04:05.123456")),
+      (2L, null, -0.0, Seq.empty[(String, Double)], java.sql.Timestamp.valueOf("1999-12-31 23:59:59")),
+      (3L, "quote \" and \u00e9", Double.NaN, null, null))
+    val df = rows.toDF("id", "name", "score", "tags", "ts")
+      .withColumn("tags", transform(col("tags"), t => struct(t("_1").as("k"), t("_2").as("w"))))
+      .withColumn("none", lit(null).cast("string"))
+    def lines(d: String) =
+      new java.io.File(d).listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
+        .toSeq.flatMap(f => java.nio.file.Files.readAllLines(f.toPath).asScala)
+    df.write.json(s"$dir/spark")
+    Sources.appendJsonl(df, s"$dir/driver")
+    assert(new java.io.File(s"$dir/driver").listFiles().count(_.getName.startsWith("part-")) == 1)
+    assert(lines(s"$dir/driver") == lines(s"$dir/spark"))
+    assert(lines(s"$dir/driver").size == 3)
   }
 
   test("malformed csv rows yield nulls under PERMISSIVE (P6)") {
